@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
@@ -13,16 +13,20 @@ import graft.sources.StageRunner
   *
   * Design (fresh, not a translation):
   *  - The De Bruijn graph is an edge table of oriented k-mers. Fork filters
-  *    (J2) are Catalyst window functions: per (k-1)-prefix keep the
-  *    max-coverage edge, then per (k-1)-suffix — after which every node has
-  *    in/out degree <= 1, so the graph is disjoint paths/cycles.
-  *  - Contigs are built by randomized path contraction: each fragment flips
-  *    a deterministic coin per round; heads offer their tail key, tails
-  *    offer their head key, and a `groupByKey(key).flatMapGroups` merges
-  *    the (<=1 head, <=1 tail) pair. One hash shuffle per round and
-  *    O(log L) rounds — vs the reference's range-partition total sort per
-  *    round (SURVEY §4.3); also fully deterministic, because the coins are
-  *    hashes of fragment endpoints, not RNG.
+  *    (J2) are fixed-width hash aggregates: per (k-1)-prefix node the four
+  *    per-base edge counts fold into four long cells and a typed pick keeps
+  *    the max-coverage edge, then the same per (k-1)-suffix — after which
+  *    every node has in/out degree <= 1, so the graph is disjoint
+  *    paths/cycles.
+  *  - Contigs are built by randomized path contraction: each round every
+  *    fragment offers at whichever of its two junctions has the higher
+  *    hash(junction key, round); a `groupByKey(key).flatMapGroups` merges
+  *    the (<=1 head, <=1 tail) pair, so a junction merges iff it outranks
+  *    both neighbouring junctions (probability 1/3; independent coins give
+  *    1/4). One hash shuffle per round and O(log L) rounds — vs the
+  *    reference's range-partition total sort per round (SURVEY §4.3); also
+  *    fully deterministic and resumable, because the ranks are hashes of
+  *    junction keys and the round, not RNG.
   *  - Convergence probe (A4, made exact): every `probeEvery` rounds test
   *    whether any junction is still both a tail and a head of open
   *    fragments (an `intersect` on the endpoint columns) — no sampled
@@ -39,17 +43,161 @@ object Assembler {
   /** A path fragment: packed (k-1)-mer endpoints + 2-bit block sequence. */
   case class Frag(head: Long, tail: Long, seq: Array[Long])
 
-  /** Deterministic per-round coin: splittable-hash of the endpoints. */
-  private def coin(f: Frag, iter: Int): Boolean = {
-    var h = f.head * 0x9E3779B97F4A7C15L + f.tail * 0xC2B2AE3D27D4EB4FL +
-      iter.toLong * 0x165667B19E3779F9L
-    h ^= h >>> 31; h *= 0xFF51AFD7ED558CCDL; h ^= h >>> 29
-    (h & 1L) == 0L
+  /** One node's four per-base edge cells ([[fourCells]] output). */
+  private[operators] case class Cells(gk: Long, c0: Long, c1: Long, c2: Long, c3: Long)
+
+  /** A surviving edge of one [[ForkSide]] pass. */
+  private[operators] case class PickedEdge(kmer: Long, count: Long, prefix: Long, suffix: Long,
+                                           flag: Boolean)
+
+  /** Per-round junction rank: a splittable-hash (murmur3 fmix64) of the
+    * junction key and the round. Each fragment offers at whichever of its
+    * two junctions ranks higher, so a junction merges iff it outranks
+    * both neighbouring junctions of its path — probability 1/3 per round
+    * for an interior junction, against 1/4 for two independent coins. */
+  private[operators] def junctionRank(key: Long, iter: Int): Long = {
+    var h = key * 0x9E3779B97F4A7C15L + iter.toLong * 0xC2B2AE3D27D4EB4FL
+    h ^= h >>> 33; h *= 0xFF51AFD7ED558CCDL
+    h ^= h >>> 33; h *= 0xC4CEB9FE1A85EC53L
+    h ^ (h >>> 33)
+  }
+
+  /** True iff the fragment offers at its tail junction this round. */
+  private def offersTail(f: Frag, iter: Int): Boolean =
+    junctionRank(f.tail, iter) > junctionRank(f.head, iter)
+
+  /** Fork picks over one node's four per-base edge cells (index = base,
+    * [[NoEdge]] where the node has no edge with that base; after RC
+    * mirroring a (k-1)-mer node has at most one edge per base). A pick
+    * returns the bases whose edges survive as a bitmask in bits 0..3, plus
+    * [[PickFlag]] (bit 4) for a per-node verdict whose meaning the pick
+    * defines. */
+  private[operators] type ForkPick = Array[Long] => Int
+  /** The empty cell: below every real cell value, so the cell's `max`
+    * over the node's rows ignores rows of the other bases. */
+  private[operators] final val NoEdge = Long.MinValue
+  /** Cell value of an edge that is present but may not survive the pick
+    * (the `popBubbles = false` suffix side: its prefix node forks). */
+  private[operators] final val Blocked = -1L
+  private[operators] final val PickFlag = 16
+
+  /** The bases set in a pick's mask. */
+  private[operators] def survivors(m: Int): Iterator[Int] =
+    Iterator.range(0, 4).filter(b => (m & (1 << b)) != 0)
+
+  /** The max-count cell, ties to the lowest base — within one node the
+    * lowest base is the lowest k-mer in both key regimes, so this is the
+    * old `(count desc, kmer asc)` group order. -1 when the node is empty. */
+  private def winnerBase(c: Array[Long]): Int = {
+    var w = -1; var b = 0
+    while (b < 4) { if (c(b) >= 0 && (w < 0 || c(b) > c(w))) w = b; b += 1 }
+    w
+  }
+
+  /** J3: a losing edge is a sequencing error iff its coverage is <=
+    * minError AND the winner at least doubles it. */
+  private def isError(loser: Long, winner: Long, minError: Int): Boolean =
+    loser <= minError && winner >= loser * 2
+
+  /** `popBubbles = true`: keep the winner, unless `minError > 0` and some
+    * loser is not an error (a REPEAT: the whole node is dropped). Both
+    * parts of [[isError]] grow stricter with the loser's count, so only
+    * the largest loser needs the test. */
+  private[operators] def pickWinner(minError: Int): ForkPick = c => {
+    val w = winnerBase(c)
+    if (w < 0) 0
+    else if (minError <= 0) 1 << w
+    else {
+      var l = -1L; var b = 0
+      while (b < 4) { if (b != w && c(b) > l) l = c(b); b += 1 }
+      if (l >= 0 && !isError(l, c(w), minError)) 0 else 1 << w
+    }
+  }
+
+  /** `-scramble`: keep the winner and every non-error loser; the flag
+    * marks a BARRIER node (>= 2 surviving arms). */
+  private[operators] def pickUnitig(minError: Int): ForkPick = c => {
+    val w = winnerBase(c)
+    if (w < 0) 0
+    else {
+      var m = 1 << w; var b = 0
+      while (b < 4) {
+        if (b != w && c(b) >= 0 && !isError(c(b), c(w), minError)) m |= 1 << b
+        b += 1
+      }
+      if (Integer.bitCount(m) >= 2) m | PickFlag else m
+    }
+  }
+
+  /** `popBubbles = false`, prefix side: keep every edge; the flag marks a
+    * node with exactly one out-edge. */
+  private[operators] val pickAllFlagUnique: ForkPick = c => {
+    var m = 0; var b = 0
+    while (b < 4) { if (c(b) >= 0) m |= 1 << b; b += 1 }
+    if (Integer.bitCount(m) == 1) m | PickFlag else m
+  }
+
+  /** `popBubbles = false`, suffix side: keep the node's only in-edge, if it
+    * has exactly one and that edge is not [[Blocked]]. */
+  private[operators] val pickUnique: ForkPick = c => {
+    var m = 0; var b = 0
+    while (b < 4) { if (c(b) != NoEdge) m |= 1 << b; b += 1 }
+    if (Integer.bitCount(m) == 1 && c(Integer.numberOfTrailingZeros(m)) >= 0) m else 0
+  }
+
+  /** One side of fork resolution in some key regime. `out = true` groups
+    * the `(kmer, count, prefix, suffix)` edge table by `prefix` (a node's
+    * out-edges, labelled by the k-mer's last base), `false` by `suffix`
+    * (in-edges, labelled by the first base). Each node's edges fold into
+    * four fixed-width cells, the `value` of the edge with that base or
+    * [[NoEdge]], and `pick` chooses the survivors; each survivor's k-mer
+    * is rebuilt from the node key and its base. Output columns `kmer,
+    * count, prefix, suffix, flag` (flag = the node's [[PickFlag]]). */
+  private[operators] trait ForkSide extends Serializable {
+    def apply(df: DataFrame, out: Boolean, value: Column, pick: ForkPick): DataFrame
+  }
+
+  /** `groupBy(node)` into four `max(when(base === b, value))` cells: a
+    * codegen'd hash aggregate with map-side partial aggregation, no sort
+    * and no per-group array. `labels(b)` is base b's value in the `base`
+    * column's domain. */
+  private[operators] def fourCells(df: DataFrame, node: Column, base: Column,
+                                   value: Column, labels: Seq[Any]): DataFrame = {
+    val cells = labels.zipWithIndex.map { case (l, i) =>
+      max(when(col("b") === l, col("v")).otherwise(NoEdge)).as(s"c$i")
+    }
+    df.select(node.as("gk"), base.as("b"), value.as("v"))
+      .groupBy(col("gk"))
+      .agg(cells.head, cells.tail: _*)
+  }
+
+  /** [[ForkSide]] for packed-Long keys (k <= 31): the prefix node is
+    * `kmer >> 2` and labels out-edges with `kmer & 3`; the suffix node is
+    * the low 2(k-1) bits and labels in-edges with the top base. */
+  private[operators] def longSide(k: Int): ForkSide = new ForkSide {
+    def apply(df: DataFrame, out: Boolean, value: Column, pick: ForkPick): DataFrame = {
+      import df.sparkSession.implicits._
+      val sh = 2 * (k - 1)
+      val mask = (1L << sh) - 1
+      val (node, base) =
+        if (out) (col("prefix"), col("kmer").bitwiseAND(lit(3L)))
+        else (col("suffix"), shiftrightunsigned(col("kmer"), sh))
+      fourCells(df, node, base, value, Seq(0L, 1L, 2L, 3L)).as[Cells]
+        .flatMap { n =>
+          val c = Array(n.c0, n.c1, n.c2, n.c3)
+          val m = pick(c)
+          survivors(m).map { b =>
+            val kv = if (out) (n.gk << 2) | b else (b.toLong << sh) | n.gk
+            PickedEdge(kv, c(b), kv >> 2, kv & mask, (m & PickFlag) != 0)
+          }
+        }
+        .toDF()
+    }
   }
 
   /** Shared fork resolution over an edge table with `kmer, count, prefix,
-    * suffix` columns (key type is Long for k <= 32, String in the wide
-    * regime — the plan is identical).
+    * suffix` columns, one [[ForkSide]] pass per node side (see
+    * [[longSide]]; `AssemblerWide` supplies the block regime's).
     *
     * `popBubbles = true, minError = 0` (default): every fork resolves to
     * its max-coverage edge (ties broken by k-mer binary order —
@@ -65,39 +213,58 @@ object Assembler {
     *
     * `popBubbles = false` (the reference's `-bubble` flag: "set to NOT
     * remove bubbles"): forks are never resolved — only unambiguous edges
-    * survive, so both bubble arms surface as separate contigs. */
-  private[operators] def resolveForks(edges: DataFrame, popBubbles: Boolean,
+    * (out-degree 1 at the prefix node AND in-degree 1 at the suffix node,
+    * both over the input table) survive, so both bubble arms surface as
+    * separate contigs. The prefix side keeps every edge and flags the
+    * unique ones; the suffix side counts all of them but keeps an edge
+    * only when it is alone and flagged.
+    *
+    * Each side is a fixed-width hash aggregate ([[fourCells]]) and a typed
+    * pick — the pick stays out of Catalyst because `greatest`/`when`
+    * chains over the four cells fuse into a much slower reduce stage. */
+  private[operators] def resolveForks(edges: DataFrame, side: ForkSide,
+                                      popBubbles: Boolean,
                                       minError: Int): DataFrame = {
-    // Hash aggregation, not a window: node degree is <= 4 (one edge per
-    // base), so each group collapses to a tiny sorted array — map-side
-    // partial aggregation and no per-partition sort, which matters because
-    // the fork filter runs over the full k-mer table, the largest dataset
-    // in the pipeline. Sort key (-count, kmer) asc == the old window's
-    // (count desc, kmer asc), so winners (incl. tie-breaks) are identical.
-    def side(df: DataFrame, key: String): DataFrame = {
-      val grouped = df
-        .groupBy(col(key).as("gk"))
-        .agg(sort_array(collect_list(struct((-col("count")).as("nc"),
-          col("kmer"), col("count"), col("prefix"), col("suffix")))).as("es"))
-      val winner = element_at(col("es"), 1)
-      val kept =
-        if (minError <= 0) grouped
-        else grouped.filter(!exists(
-          slice(col("es"), lit(2), greatest(size(col("es")) - 1, lit(0))),
-          x => x.getField("count") > minError ||
-            winner.getField("count") < x.getField("count") * 2))
-      kept.select(winner.getField("kmer").as("kmer"),
-        winner.getField("count").as("count"),
-        winner.getField("prefix").as("prefix"),
-        winner.getField("suffix").as("suffix"))
-    }
     val resolved =
-      if (popBubbles) side(side(edges, "prefix"), "suffix")
-      else edges
-        .withColumn("n_out", count(lit(1)).over(Window.partitionBy("prefix")))
-        .withColumn("n_in", count(lit(1)).over(Window.partitionBy("suffix")))
-        .filter(col("n_out") === 1 && col("n_in") === 1)
+      if (popBubbles) {
+        val pick = pickWinner(minError)
+        side(side(edges, out = true, col("count"), pick), out = false, col("count"), pick)
+      } else {
+        val flagged = side(edges, out = true, col("count"), pickAllFlagUnique)
+        side(flagged, out = false,
+          when(col("flag"), col("count")).otherwise(Blocked), pickUnique)
+      }
     resolved.select("kmer", "count", "prefix", "suffix")
+  }
+
+  /** The `-scramble` (repeat-aware) fork treatment — the reference's
+    * DSMain64 two-branch path (`ReflexivDSMain64.java:686-756`: sorted
+    * groups are classified extendable/unextendable and the unextendable
+    * ones are carried, not dropped), re-expressed as classic
+    * unitig-with-overlap semantics: each fork arm is classified by the
+    * same minError rule as [[resolveForks]], losing ERROR arms are still
+    * dropped (bubble/tip removal), but a group with >= 2 surviving arms is
+    * a genuine REPEAT junction — ALL its arms are KEPT and the junction
+    * node is marked a BARRIER. Contraction then stops AT the junction
+    * instead of discarding its k-mers: every incident unitig keeps the
+    * junction's k-1 bases, so adjacent unitigs overlap by k-1 (the
+    * standard unitig convention) and no genomic k-mer is lost — where the
+    * default mode deletes the whole contested group and over-fragments
+    * (VERDICT r4 "what's missing" #2).
+    *
+    * Returns (surviving edges, barrier node keys `gk`). Plan shape: the
+    * same two fixed-width side passes as [[resolveForks]] (with
+    * [[pickUnitig]]) plus one distinct over the (tiny) barrier set —
+    * nothing data-sized is new. */
+  private[operators] def resolveForksUnitig(edges: DataFrame, side: ForkSide,
+                                            minError: Int): (DataFrame, DataFrame) = {
+    val pick = pickUnitig(minError)
+    val s1 = side(edges, out = true, col("count"), pick)
+    val s2 = side(s1, out = false, col("count"), pick)
+    val barriers = s1.filter(col("flag")).select(col("prefix").as("gk"))
+      .union(s2.filter(col("flag")).select(col("suffix").as("gk")))
+      .distinct()
+    (s2.select("kmer", "count", "prefix", "suffix"), barriers)
   }
 
   /** RC-mirrored oriented edge table `(kmer, count, prefix, suffix)`. */
@@ -120,48 +287,7 @@ object Assembler {
   def forkFilteredEdges(counts: DataFrame, k: Int,
                         popBubbles: Boolean = true,
                         minError: Int = 0): DataFrame =
-    resolveForks(mirroredEdges(counts, k), popBubbles, minError)
-
-  /** The `-scramble` (repeat-aware) fork treatment — the reference's
-    * DSMain64 two-branch path (`ReflexivDSMain64.java:686-756`: sorted
-    * groups are classified extendable/unextendable and the unextendable
-    * ones are carried, not dropped), re-expressed as classic
-    * unitig-with-overlap semantics: each fork arm is classified by the
-    * same minError rule as [[resolveForks]], losing ERROR arms are still
-    * dropped (bubble/tip removal), but a group with >= 2 surviving arms is
-    * a genuine REPEAT junction — ALL its arms are KEPT and the junction
-    * node is marked a BARRIER. Contraction then stops AT the junction
-    * instead of discarding its k-mers: every incident unitig keeps the
-    * junction's k-1 bases, so adjacent unitigs overlap by k-1 (the
-    * standard unitig convention) and no genomic k-mer is lost — where the
-    * default mode deletes the whole contested group and over-fragments
-    * (VERDICT r4 "what's missing" #2).
-    *
-    * Returns (surviving edges, barrier node keys). Plan shape: the same
-    * two degree-<=4 hash aggregations as [[resolveForks]] plus one
-    * distinct over the (tiny) barrier set — nothing data-sized is new. */
-  private[operators] def resolveForksUnitig(edges: DataFrame,
-                                            minError: Int): (DataFrame, DataFrame) = {
-    def side(df: DataFrame, key: String): (DataFrame, DataFrame) = {
-      val grouped = df
-        .groupBy(col(key).as("gk"))
-        .agg(sort_array(collect_list(struct((-col("count")).as("nc"),
-          col("kmer"), col("count"), col("prefix"), col("suffix")))).as("es"))
-      val winner = element_at(col("es"), 1)
-      // per-arm J3 classification: a losing arm is a sequencing error iff
-      // its coverage is <= minError AND the winner at least doubles it
-      val surv = grouped.withColumn("sv", filter(col("es"),
-        (x, i) => (i === 0) || !(x.getField("count") <= minError &&
-          winner.getField("count") >= x.getField("count") * 2)))
-      val kept = surv.select(explode(col("sv")).as("e"))
-        .select(col("e.kmer").as("kmer"), col("e.count").as("count"),
-          col("e.prefix").as("prefix"), col("e.suffix").as("suffix"))
-      (kept, surv.filter(size(col("sv")) >= 2).select(col("gk")))
-    }
-    val (e1, b1) = side(edges, "prefix")
-    val (e2, b2) = side(e1, "suffix")
-    (e2, b1.union(b2).distinct())
-  }
+    resolveForks(mirroredEdges(counts, k), longSide(k), popBubbles, minError)
 
   /** Scramble-mode seed fragments: one per surviving edge, with any
     * endpoint that touches a barrier junction replaced by a per-edge
@@ -173,7 +299,7 @@ object Assembler {
   private def scrambleSeed(counts: DataFrame, k: Int, minError: Int): Dataset[Frag] = {
     val s = counts.sparkSession
     import s.implicits._
-    val (edges, barriers) = resolveForksUnitig(mirroredEdges(counts, k), minError)
+    val (edges, barriers) = resolveForksUnitig(mirroredEdges(counts, k), longSide(k), minError)
     edges
       .join(barriers.select(col("gk").as("bp")), col("prefix") === col("bp"), "left")
       .join(barriers.select(col("gk").as("bs")), col("suffix") === col("bs"), "left")
@@ -340,14 +466,16 @@ object Assembler {
     }.collect().foldLeft((0L, 0L)) { case ((an, ab), (cn, cb)) => (an + cn, ab + cb) }
   }
 
-  /** One contraction round (J1 + P9): merge adjacent fragments whose coins
-    * line up. Exactly one offer per fragment => each key group holds at
-    * most one head-offer and one tail-offer. */
+  /** One contraction round (J1 + P9): every fragment offers at its
+    * higher-ranked junction ([[junctionRank]]), and two fragments merge
+    * when both offer at the junction they share. Exactly one offer per
+    * fragment => each key group holds at most one head-offer and one
+    * tail-offer. */
   private[operators] def mergeRound(frags: Dataset[Frag], k: Int, iter: Int): Dataset[Frag] = {
     import frags.sparkSession.implicits._
     frags
       .map { f =>
-        val h = coin(f, iter)
+        val h = offersTail(f, iter)
         (if (h) f.tail else f.head, h, f)
       }
       .groupByKey(_._1)
@@ -374,7 +502,7 @@ object Assembler {
     * instead of `localCheckpoint` — on a real cluster a lost executor after
     * round 50 recomputes from the last durable round, and a restarted
     * driver RESUMES the contraction at the latest completed round (the
-    * per-round coins are hashes of (endpoints, round), so a resumed run is
+    * per-round junction ranks are hashes of (junction, round), so a resumed run is
     * bit-identical to an uninterrupted one). `None` keeps the cheap
     * memory-local truncation for short interactive runs.
     *

@@ -1,13 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.Tables._
 import graft.core.KmerCodec
 import graft.sources.StageRunner
 
-/** Wide-k assembly (k > 32): the same fork-filter + randomized-contraction
+/** Wide-k assembly (k > 31): the same fork-filter + junction-priority contraction
   * algorithm as [[Assembler]], with (k-1)-mer endpoint keys AND sequences
   * in 2-bit block form (the reference's 64-bit variants,
   * `ReflexivDSMain64.java` / `ReflexivDSDynamicKmer64.java`, cover this
@@ -32,13 +31,11 @@ object AssemblerWide {
     h
   }
 
-  private def coin(f: FragW, iter: Int): Boolean = {
-    var h = hashBlocks(f.head) * 0x9E3779B97F4A7C15L +
-      hashBlocks(f.tail) * 0xC2B2AE3D27D4EB4FL +
-      iter.toLong * 0x165667B19E3779F9L
-    h ^= h >>> 31; h *= 0xFF51AFD7ED558CCDL; h ^= h >>> 29
-    (h & 1L) == 0L
-  }
+  /** True iff the fragment offers at its tail junction this round (see
+    * [[Assembler.junctionRank]]). */
+  private def offersTail(f: FragW, iter: Int): Boolean =
+    Assembler.junctionRank(hashBlocks(f.tail), iter) >
+      Assembler.junctionRank(hashBlocks(f.head), iter)
 
   /** Deterministic content ordering for the merge pairing. */
   private val fragOrd: Ordering[FragW] = new Ordering[FragW] {
@@ -64,13 +61,39 @@ object AssemblerWide {
       .toDF("kmer", "prefix", "suffix", "count")
   }
 
+  /** [[Assembler.ForkSide]] for the string edge table: out-edges are
+    * labelled by the k-mer's last character, in-edges by its first, and a
+    * survivor's k-mer is the node key with its base appended or
+    * prepended. */
+  private[operators] def wideSide(k: Int): Assembler.ForkSide = new Assembler.ForkSide {
+    def apply(df: DataFrame, out: Boolean, value: Column,
+              pick: Assembler.ForkPick): DataFrame = {
+      import df.sparkSession.implicits._
+      val (node, base) =
+        if (out) (col("prefix"), substring(col("kmer"), k, 1))
+        else (col("suffix"), substring(col("kmer"), 1, 1))
+      Assembler.fourCells(df, node, base, value, Seq("A", "C", "G", "T"))
+        .as[(String, Long, Long, Long, Long)]
+        .flatMap { case (gk, c0, c1, c2, c3) =>
+          val c = Array(c0, c1, c2, c3)
+          val m = pick(c)
+          Assembler.survivors(m).map { b =>
+            val km = if (out) gk + "ACGT".charAt(b) else "ACGT".charAt(b).toString + gk
+            (km, c(b), km.substring(0, k - 1), km.substring(1),
+              (m & Assembler.PickFlag) != 0)
+          }
+        }
+        .toDF("kmer", "count", "prefix", "suffix", "flag")
+    }
+  }
+
   /** P6 + J2 for block-encoded counts `(kb: Array[Long], count)`; see
     * [[Assembler.resolveForks]] for the `popBubbles` / `minError`
     * semantics. */
   def forkFilteredEdges(counts: DataFrame, k: Int,
                         popBubbles: Boolean = true,
                         minError: Int = 0): DataFrame =
-    Assembler.resolveForks(mirroredEdges(counts, k), popBubbles, minError)
+    Assembler.resolveForks(mirroredEdges(counts, k), wideSide(k), popBubbles, minError)
 
   /** Wide-k `-scramble` seed (see [[Assembler.resolveForksUnitig]] for the
     * repeat semantics): fragments whose barrier-touching endpoints are
@@ -88,7 +111,7 @@ object AssemblerWide {
     val s = counts.sparkSession
     import s.implicits._
     val (edges, barriers) =
-      Assembler.resolveForksUnitig(mirroredEdges(counts, k), minError)
+      Assembler.resolveForksUnitig(mirroredEdges(counts, k), wideSide(k), minError)
     edges
       .join(barriers.select(col("gk").as("bp")), col("prefix") === col("bp"), "left")
       .join(barriers.select(col("gk").as("bs")), col("suffix") === col("bs"), "left")
@@ -106,7 +129,7 @@ object AssemblerWide {
     import frags.sparkSession.implicits._
     frags
       .map { f =>
-        val h = coin(f, iter)
+        val h = offersTail(f, iter)
         // Seq wrapper: content-based equality/hash for the group key
         ((if (h) f.tail else f.head).toSeq, h, f)
       }

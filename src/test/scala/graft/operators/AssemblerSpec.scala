@@ -183,4 +183,22 @@ class AssemblerSpec extends AnyFunSuite {
     val contigs = Assembler.assemble(counts, 31, minCov = 2, maxIter = 40).collect().toSeq
     assert(contigs == Seq(canonStr(genome)))
   }
+
+  /** Merge-rate pin: with `localThreshold = 0` the whole contraction runs
+    * as distributed rounds. Junction-priority offers merge an interior
+    * junction with probability 1/3 per round and take 30 rounds here;
+    * the independent 1/4 coins they replaced took 42 on the same input. */
+  test("junction-priority merging: exact contig and a pinned round budget (fully distributed)") {
+    import graft.core.Counters
+    val genome = randGenome(20000, seed = 59)
+    val rds = reads(genome, 100, 11)
+    import spark.implicits._
+    val counts = Genomics.countCanonical(rds.toDS(), 31).localCheckpoint()
+    val before = Counters.snapshot
+    val contigs = Assembler.assemble(counts, 31, minCov = 1, maxIter = 200,
+      localThreshold = 0).collect().toSeq
+    val rounds = Counters.diff(before, Counters.snapshot).getOrElse("assembler.rounds", 0L)
+    assert(contigs == Seq(canonStr(genome)))
+    assert(rounds > 0 && rounds <= 33, s"assembler.rounds = $rounds")
+  }
 }
